@@ -108,3 +108,19 @@ def list_child_dirs(spark: SparkSession, path: str) -> list[str]:
         for st in fs.listStatus(jpath)
         if st.isDirectory()
     ]
+
+
+def first_line(spark: SparkSession, path: str, skip_prefix: str | None = None) -> str | None:
+    """First non-empty line of the file at `path` that does not start with
+    `skip_prefix`; None if there is none. A header probe that opens one
+    stream on the file's own filesystem instead of running a Spark job."""
+    fs, jpath = _fs_and_path(spark, path)
+    jvm = spark._jvm
+    reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(fs.open(jpath), "UTF-8"))
+    try:
+        while (line := reader.readLine()) is not None:
+            if line and not (skip_prefix and line.startswith(skip_prefix)):
+                return line
+        return None
+    finally:
+        reader.close()

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gtec_etl_spark.session import empty_frame
+
 
 def derived_key_join(
     fact: DataFrame,
@@ -110,8 +112,9 @@ def conflict_checked_merge(
             .select(key, "c.column", "c.base_value", "c.extra_value")
         )
     else:
-        conflicts = joined.sparkSession.createDataFrame(
-            [], f"{key} string, column string, base_value string, extra_value string"
+        conflicts = empty_frame(
+            joined.sparkSession,
+            f"`{key}` string, column string, base_value string, extra_value string",
         )
 
     merged = joined
@@ -122,11 +125,6 @@ def conflict_checked_merge(
         merged = merged.withColumn(c, F.col(f"__x_{c}"))
     merged = merged.drop(*[f"__x_{c}" for c in extra.columns if c != key])
     return merged, conflicts
-
-
-def semi_filter(df: DataFrame, keep_if_in: DataFrame, key: str | list[str]) -> DataFrame:
-    """J10 referenced-samples filter (bin/topmed_to_dats.py:251-266)."""
-    return df.join(keep_if_in, key, "left_semi")
 
 
 def anti_filter(df: DataFrame, drop_if_in: DataFrame, key: str | list[str]) -> DataFrame:

@@ -7,9 +7,20 @@ lifecycle (SURVEY.md §3.1) composed from the engine's building blocks:
   reconciliation (A2) → JSON-LD document emission (K1) → TSV dump (K3)
   → checksummed bag (K4).
 
-Everything before the final writes is lazy DataFrame lineage — the "plan"
-the reference encodes as a Python call graph (SURVEY.md §3) is here a
-single Catalyst plan per output.
+The "plan" the reference encodes as a Python call graph (SURVEY.md §3) is
+here lazy DataFrame lineage, and a release runs only these Spark actions:
+
+  1. one validation action over all sources (the union of their violation
+     frames, sources.validated.assert_valid);
+  2. one materialization of the per-group JSON-LD documents
+     (localCheckpoint), whose (group, size) rows also feed the group-size
+     reconciliation, checked on the driver;
+  3. two single-file writes in export_release: the TSV dump, then the
+     documents read back from the checkpoint;
+  4. the bag, built and hashed on the driver with no Spark job.
+
+Header checks read the first line through the Hadoop FileSystem and the
+empty frames are JVM-side relations, so no step starts a Python worker.
 """
 
 from __future__ import annotations
@@ -20,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gtec_etl_spark.operators import joins as J
+from gtec_etl_spark.session import empty_frame
 from gtec_etl_spark.sinks import jsonld
 from gtec_etl_spark.sinks.bdbag import make_bag
 from gtec_etl_spark.sinks.tabular import write_tsv_dump
@@ -72,13 +84,21 @@ def run_gtex_like_etl(
 ) -> EtlResult:
     """Extract + transform. Raises ValidationError on any source-constraint
     violation (the reference's mid-parse fatal, SURVEY.md §7.4)."""
-    subjects = validated.read_tsv(spark, subjects_tsv, SUBJECT_SPEC)
-    validated.assert_valid(subjects, SUBJECT_SPEC)
-    subjects = validated.apply_mappings(subjects, SUBJECT_SPEC)
-
-    samples = validated.read_tsv(spark, samples_tsv, SAMPLE_SPEC)
-    validated.assert_valid(samples, SAMPLE_SPEC)
-    samples = validated.apply_mappings(samples, SAMPLE_SPEC)
+    sources = {
+        "subjects": (validated.read_tsv(spark, subjects_tsv, SUBJECT_SPEC), SUBJECT_SPEC),
+        "samples": (validated.read_tsv(spark, samples_tsv, SAMPLE_SPEC), SAMPLE_SPEC),
+    }
+    if restricted_tsv is not None:
+        sources["restricted"] = (
+            validated.read_tsv(spark, restricted_tsv, RESTRICTED_SPEC),
+            RESTRICTED_SPEC,
+        )
+    validated.assert_valid(sources)
+    subjects = validated.apply_mappings(*sources["subjects"])
+    samples = validated.apply_mappings(*sources["samples"])
+    restricted = (
+        validated.apply_mappings(*sources["restricted"]) if "restricted" in sources else None
+    )
 
     # J1: derive the subject key from the sample id; audit dangling FKs.
     samples = samples.withColumn(
@@ -87,45 +107,23 @@ def run_gtex_like_etl(
     dangling = J.dangling_keys(samples, subjects.select("SUBJID"), "SUBJID")
     linked = samples.join(F.broadcast(subjects), "SUBJID")
 
-    conflicts = None
-    if restricted_tsv is not None:
-        restricted = validated.read_tsv(spark, restricted_tsv, RESTRICTED_SPEC)
-        validated.assert_valid(restricted, RESTRICTED_SPEC)
-        restricted = validated.apply_mappings(restricted, RESTRICTED_SPEC)
+    if restricted is not None:
         subjects, conflicts = J.conflict_checked_merge(subjects, restricted, "SUBJID")
-    if conflicts is None:
-        conflicts = spark.createDataFrame(
-            [], "SUBJID string, column string, base_value string, extra_value string"
+    else:
+        conflicts = empty_frame(
+            spark, "SUBJID string, column string, base_value string, extra_value string"
         )
 
-    # A1 consent StudyGroups with sorted member lists; A2 reconciliation.
-    group_key = "CONSENT" if restricted_tsv is not None else "SEX"
+    # A1 consent StudyGroups with sorted member lists.
+    group_key = "CONSENT" if restricted is not None else "SEX"
     groups = subjects.groupBy(group_key).agg(
         F.count(F.lit(1)).alias("size"),
         F.concat_ws(",", F.sort_array(F.collect_list("SUBJID"))).alias("members"),
     )
-    if expected_group_sizes:
-        expected = spark.createDataFrame(
-            list(expected_group_sizes.items()), f"{group_key} string, expected long"
-        )
-        # Expectations are EXHAUSTIVE (the reference's per-file count check):
-        # full_outer so all three failure modes surface — wrong size,
-        # expected-but-absent group (size NULL), and computed-but-unexpected
-        # group (expected NULL).
-        bad = (
-            groups.join(expected, group_key, "full_outer")
-            .filter(
-                F.coalesce(F.col("size"), F.lit(-1))
-                != F.coalesce(F.col("expected"), F.lit(-2))
-            )
-        )
-        if bad.take(1):
-            raise ValueError(
-                f"consent-group size reconciliation failed: {bad.collect()}"
-            )
 
     # K1: one JSON-LD document per study group (deterministic ids, sorted
-    # members as @id refs).
+    # members as @id refs). One row per group, reused by the reconciliation
+    # below and by the release write: materialized once.
     subj_struct = F.struct(
         jsonld.content_id("Material", "SUBJID").alias("@id"),
         F.lit("Material").alias("@type"),
@@ -142,6 +140,7 @@ def run_gtex_like_etl(
         )
         .select(
             F.col(group_key).alias("group"),
+            F.col("size"),
             jsonld.to_document(
                 F.struct(
                     jsonld.content_id("StudyGroup", group_key).alias("@id"),
@@ -152,7 +151,25 @@ def run_gtex_like_etl(
                 )
             ).alias("doc"),
         )
+        .localCheckpoint()
     )
+
+    # A2 reconciliation on the driver. Expectations are EXHAUSTIVE (the
+    # reference's per-file count check): a wrong size, an expected-but-absent
+    # group and a computed-but-unexpected group all fail; a NULL group never
+    # matches an expectation.
+    if expected_group_sizes:
+        computed = {r["group"]: r["size"] for r in documents.select("group", "size").collect()}
+        bad = [
+            (g, computed.get(g), expected_group_sizes.get(g))
+            for g in sorted(computed.keys() | expected_group_sizes.keys(), key=str)
+            if g is None or computed.get(g) != expected_group_sizes.get(g)
+        ]
+        if bad:
+            raise ValueError(
+                "consent-group size reconciliation failed "
+                f"(group, size, expected): {bad}"
+            )
 
     return EtlResult(
         subjects=subjects,

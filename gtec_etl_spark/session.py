@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "gtec_etl_spark", cpus: int | None = None) -> SparkSession:
@@ -62,3 +64,13 @@ def get_spark(app_name: str = "gtec_etl_spark", cpus: int | None = None) -> Spar
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """Zero-row DataFrame with the DDL schema (all columns nullable), built
+    as a JVM-side empty relation. `spark.createDataFrame([], ddl)` gives the
+    same frame but plans a Python-side scan: any action on it starts a
+    Python worker, even with no rows."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in StructType.fromDDL(ddl)]
+    )

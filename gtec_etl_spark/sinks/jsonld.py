@@ -302,10 +302,13 @@ def write_documents(
     sinks/bdbag.py)."""
     from gtec_etl_spark.sinks.tabular import finalize_deterministic_dir
 
-    # Global sort on the document text: row order within and across part
-    # files is then engine-deterministic, not shuffle-arrival order.
-    out = docs.select(doc_col).orderBy(doc_col)
+    # Sort on the document text: row order within and across part files is
+    # then engine-deterministic, not shuffle-arrival order. One file needs
+    # no range partitioning (and so no sampling job), only a local sort.
+    out = docs.select(doc_col)
     if single_file:
-        out = out.coalesce(1)
+        out = out.repartition(1).sortWithinPartitions(doc_col)
+    else:
+        out = out.orderBy(doc_col)
     out.write.mode("overwrite").text(path)
     finalize_deterministic_dir(docs.sparkSession, path, "txt")

@@ -58,13 +58,17 @@ def write_tsv_dump(
 ) -> None:
     """Write a deterministically-ordered TSV (header per part file).
 
-    single_file=True coalesces to one partition — only for small exports
-    (the reference's behavior); leave False at scale. Output filenames are
-    finalized to stable names so repeated runs are byte-identical.
+    single_file=True writes one partition — only for small exports (the
+    reference's behavior); leave False at scale. It sorts within that one
+    partition instead of range-partitioning, so no sampling job runs; with
+    a total sort key the bytes equal the concatenated multi-part output.
+    Output filenames are finalized to stable names so repeated runs are
+    byte-identical.
     """
-    out = df.orderBy(*order_cols)
     if single_file:
-        out = out.coalesce(1)
+        out = df.repartition(1).sortWithinPartitions(*order_cols)
+    else:
+        out = df.orderBy(*order_cols)
     (
         out.write.mode("overwrite")
         .option("sep", "\t")
@@ -73,13 +77,6 @@ def write_tsv_dump(
         .csv(path)
     )
     finalize_deterministic_dir(df.sparkSession, path, "tsv")
-
-
-def write_partitioned_json(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """K2 per-entity JSON writer: JSON-lines output partitioned by entity
-    key columns (the scale-safe form of one-file-per-sample,
-    ccmm/gtex/rna_extracts.py:167-191)."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).json(path)
 
 
 def write_range_bucketed(

@@ -16,10 +16,15 @@ All checks are native column expressions (rlike / isin / map lookup), so a
 
 from __future__ import annotations
 
+import csv
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gtec_etl_spark import fsutil
+from gtec_etl_spark.session import empty_frame
 
 
 @dataclass
@@ -61,17 +66,20 @@ def read_tsv(
 ) -> DataFrame:
     """Read a header-checked delimited file with all columns as raw strings
     (the reference's raw_value layer). Header names are verified against the
-    declared schema positionally (parsers/util.py:42-47)."""
+    declared schema positionally (parsers/util.py:42-47). The header is the
+    first non-comment line, read through the Hadoop FileSystem (no Spark
+    job); the returned reader skips the same comment lines."""
+    line = fsutil.first_line(spark, path, comment)
+    header = next(csv.reader([line], delimiter=sep)) if line else []
+    if header != spec.names():
+        raise ValueError(
+            f"header mismatch: file has {header}, declared {spec.names()}"
+        )
     schema = ", ".join(f"`{c.name}` string" for c in spec.columns)
-    reader = spark.read.option("header", True).option("sep", sep)
+    reader = spark.read.option("header", True).option("sep", sep).schema(schema)
     if comment:
         reader = reader.option("comment", comment)
-    df = reader.csv(path)
-    if df.columns != spec.names():
-        raise ValueError(
-            f"header mismatch: file has {df.columns}, declared {spec.names()}"
-        )
-    return spark.read.option("header", True).option("sep", sep).schema(schema).csv(path)
+    return reader.csv(path)
 
 
 def validate(df: DataFrame, spec: TableSpec) -> DataFrame:
@@ -137,8 +145,8 @@ def validate(df: DataFrame, spec: TableSpec) -> DataFrame:
                 )
             )
     if not checks:
-        cell_violations = df.sparkSession.createDataFrame(
-            [], "row_key string, column string, value string, check string"
+        cell_violations = empty_frame(
+            df.sparkSession, "row_key string, column string, value string, check string"
         )
     else:
         cell_violations = (
@@ -164,10 +172,35 @@ def validate(df: DataFrame, spec: TableSpec) -> DataFrame:
     return cell_violations
 
 
-def assert_valid(df: DataFrame, spec: TableSpec, sample: int = 20) -> None:
+def assert_valid(
+    df: DataFrame | dict[str, tuple[DataFrame, TableSpec]],
+    spec: TableSpec | None = None,
+    sample: int = 20,
+) -> None:
     """Fail-fast: collect a bounded sample of violations and raise — the
-    lazy-engine version of the reference's mid-parse sys.exit(1)."""
-    bad = validate(df, spec).limit(sample).collect()
+    lazy-engine version of the reference's mid-parse sys.exit(1).
+
+    Takes one table (`df, spec`) or several (`{name: (df, spec)}`). All
+    tables are checked in ONE action: the union of their validate() frames,
+    each row tagged with its table name (`table`; None for the one-table
+    form), so a release with three sources pays one action, not three. The
+    sample is the first `sample` violations in (table, row_key, column,
+    check, value) order: a top-k reads every partition in one job and
+    names the same violations on every run, where a bare limit() on a
+    valid input scans the partitions in growing batches, one job each."""
+    tables = df if isinstance(df, dict) else {None: (df, spec)}
+    violations = reduce(
+        DataFrame.unionByName,
+        [
+            validate(t, s).select(F.lit(name).cast("string").alias("table"), "*")
+            for name, (t, s) in tables.items()
+        ],
+    )
+    bad = (
+        violations.orderBy("table", "row_key", "column", "check", "value")
+        .limit(sample)
+        .collect()
+    )
     if bad:
         raise ValidationError([r.asDict() for r in bad])
 

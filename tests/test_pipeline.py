@@ -133,6 +133,85 @@ def test_etl_count_reconciliation_fails(spark, fixture_files):
         )
 
 
+def test_etl_reconciliation_fails_on_absent_group(spark, fixture_files):
+    subjects, samples, restrictedf = fixture_files
+    with pytest.raises(ValueError, match="reconciliation") as err:
+        pipelines.run_gtex_like_etl(
+            spark,
+            subjects,
+            samples,
+            restrictedf,
+            expected_group_sizes={"1": 2, "2": 1, "3": 4},
+        )
+    assert "('3', None, 4)" in str(err.value)
+
+
+def test_etl_reconciliation_fails_on_null_group(spark, fixture_files, tmp_path):
+    # Without a restricted file the groups are keyed by SEX, which may be
+    # empty (-> NULL group). A NULL group never matches an expectation,
+    # not even an expectation keyed by None.
+    _, samples, _ = fixture_files
+    subjects = _w(
+        tmp_path / "subjects_null_sex.tsv",
+        """\
+        SUBJID\tSEX\tAGE
+        GTEX-AB1\t1\t20-29
+        GTEX-CD2\t2\t30-39
+        GTEX-EF3\t\t40-49
+        """,
+    )
+    for expected in ({"male": 1, "female": 1}, {"male": 1, "female": 1, None: 1}):
+        with pytest.raises(ValueError, match="reconciliation"):
+            pipelines.run_gtex_like_etl(
+                spark, subjects, samples, expected_group_sizes=expected
+            )
+
+
+def test_etl_without_restricted_has_typed_empty_conflicts(spark, fixture_files):
+    subjects, samples, _ = fixture_files
+    res = pipelines.run_gtex_like_etl(
+        spark, subjects, samples, expected_group_sizes={"male": 2, "female": 1}
+    )
+    assert res.conflicts.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in res.conflicts.schema] == [
+        ("SUBJID", "string"),
+        ("column", "string"),
+        ("base_value", "string"),
+        ("extra_value", "string"),
+    ]
+
+
+# Spark jobs the fixture lifecycle (run_gtex_like_etl + export_release) may
+# start. Measured as the size of the job group below on local[1], local[4]
+# and local[8] (13 on each; the lifecycle before the one-action validation
+# and driver-side reconciliation started 23-25): 4 for the validation
+# action (three duplicate-key shuffles + the top-k), 4 for the documents
+# checkpoint and the reconciliation collect, 3 for the TSV dump and 2 for
+# the documents write. A header probe, a range-sampling sort, a limit()
+# that scans in batches or a Python-list DataFrame on this path pushes the
+# count over the budget.
+RELEASE_JOB_BUDGET = 13
+
+
+def test_release_lifecycle_job_budget(spark, fixture_files, tmp_path):
+    subjects, samples, restrictedf = fixture_files
+    sc = spark.sparkContext
+    group = f"release-job-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "release lifecycle job budget")
+    try:
+        res = pipelines.run_gtex_like_etl(
+            spark, subjects, samples, restrictedf, expected_group_sizes={"1": 2, "2": 1}
+        )
+        pipelines.export_release(
+            res, str(tmp_path / "release"), str(tmp_path / "release.tgz")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= RELEASE_JOB_BUDGET
+
+
 @pytest.fixture()
 def multi_study_frames(spark):
     studies = spark.createDataFrame(

@@ -79,6 +79,59 @@ def test_validated_tsv_header_mismatch_fails(spark, tmp_path):
         validated.read_tsv(spark, path, SPEC)
 
 
+def test_validated_tsv_header_read_through_file_uri(spark, tmp_path):
+    # The header probe goes through the Hadoop FileSystem, so a scheme-
+    # qualified path (as an s3a:// or hdfs:// one would be) resolves too.
+    path = _write(tmp_path / "u.tsv", "SUBJID\tSEX\tAGE\tWEIGHT\nGTEX-AB1\t1\t20-29\t1\n")
+    assert validated.read_tsv(spark, "file://" + path, SPEC).count() == 1
+    with pytest.raises(ValueError, match="header mismatch"):
+        validated.read_tsv(spark, "file://" + path, SPEC, sep=",")
+
+
+def test_validated_tsv_comment_lines_are_skipped(spark, tmp_path):
+    path = _write(
+        tmp_path / "c.tsv",
+        """\
+        # exported 2017-01-01
+        # two comment lines before the header
+        SUBJID\tSEX\tAGE\tWEIGHT
+        GTEX-AB1\t1\t20-29\t70.5
+        # a comment between data rows
+        GTEX-CD2\t2\t30-39\t
+        """,
+    )
+    df = validated.read_tsv(spark, path, SPEC, comment="#")
+    assert sorted(r["SUBJID"] for r in df.collect()) == ["GTEX-AB1", "GTEX-CD2"]
+    validated.assert_valid(df, SPEC)
+
+
+def test_assert_valid_reports_every_table_in_one_error(spark, tmp_path):
+    subjects = _write(
+        tmp_path / "s.tsv",
+        """\
+        SUBJID\tSEX\tAGE\tWEIGHT
+        GTEX-AB1\t3\t20-29\t1.0
+        """,
+    )
+    visits = _write(
+        tmp_path / "v.tsv",
+        """\
+        SUBJID\tSEX\tAGE\tWEIGHT
+        GTEX-AB1\t1\t99-100\t1.0
+        """,
+    )
+    tables = {
+        name: (validated.read_tsv(spark, path, SPEC), SPEC)
+        for name, path in (("subjects", subjects), ("visits", visits))
+    }
+    with pytest.raises(validated.ValidationError) as err:
+        validated.assert_valid(tables)
+    assert {(v["table"], v["column"], v["check"]) for v in err.value.sample} == {
+        ("subjects", "SEX", "integer_cv"),
+        ("visits", "AGE", "cv"),
+    }
+
+
 # ---------------------------------------------------------------- S10 GFF3
 
 GFF = """\
