@@ -4,14 +4,29 @@ Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings. Parquet scans give Catalyst predicate pushdown
 and column pruning for free — every query should show `PushedFilters` /
 pruned `ReadSchema` in `.explain("formatted")`.
+
+Schema memo: `spark.read.parquet(path)` with no schema makes Spark merge
+the footer schemas in a one-task job before the query is even planned.
+`table()` lets that inference run once per path and SparkSession, keeps
+the schema Spark inferred, and reads the path again with
+`spark.read.schema(<kept>).parquet(path)`, which runs no job. The memo is
+keyed on the path and a stat fingerprint: size and `st_mtime_ns` of the
+file, or of every file under the directory. Rewriting, adding or removing
+a file changes the fingerprint, so the next read infers again. Paths that
+are not on the local file system (object-store or HDFS URIs) have no
+fingerprint and are inferred on every read, as before. The events table
+does not need the memo: its schema is pinned from one footer (below).
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import weakref
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -49,25 +64,47 @@ EVENTS_SCHEMA = (
     " value double, props string"
 )
 
-_EVENTS_TS_UNIT_CACHE: dict[str, str] = {}
+
+def _fingerprint(path: str) -> tuple | None:
+    """(name, size, st_mtime_ns) of the file at `path`, of every file under
+    the directory, or of every match of the glob; None when nothing local
+    matches (a URI, or a missing path)."""
+    if glob.has_magic(path):
+        files = sorted(glob.glob(path))
+    elif os.path.isdir(path):
+        files = sorted(
+            os.path.join(root, f) for root, _, names in os.walk(path) for f in names
+        )
+    else:
+        files = [path] if os.path.isfile(path) else []
+    out = []
+    for f in files:
+        st = os.stat(f)
+        out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out) or None
+
+
+# path -> (fingerprint, unit)
+_EVENTS_TS_UNIT_CACHE: dict[str, tuple[tuple | None, str]] = {}
 
 
 def events_ts_unit(path: str) -> str:
     """Parquet time unit of the `ts` column ('ns'/'us'/'ms'/'s'), read from
-    one footer driver-side. Cached per path: a 100 TB lake directory is
-    still a single footer read, and a mixed nanos/micros lake is handled
-    per-directory instead of by a global config that would silently corrupt
-    whichever unit the config doesn't match."""
-    if path not in _EVENTS_TS_UNIT_CACHE:
-        import glob as _glob
-
+    one footer driver-side. Cached per path and stat fingerprint: a 100 TB
+    lake directory is still a single footer read, a file regenerated at the
+    same path with another unit is probed again, and a mixed nanos/micros
+    lake is handled per-directory instead of by a global config that would
+    silently corrupt whichever unit the config doesn't match."""
+    fp = _fingerprint(path)
+    cached = _EVENTS_TS_UNIT_CACHE.get(path)
+    if cached is None or cached[0] != fp:
         import pyarrow.parquet as _pq
 
         probe = path
         if os.path.isdir(path):
             probe = os.path.join(path, "*.parquet")
-        if _glob.has_magic(probe):
-            files = sorted(_glob.glob(probe))
+        if glob.has_magic(probe):
+            files = sorted(glob.glob(probe))
             if not files:
                 # Without this, pq.read_schema would receive the literal
                 # '*.parquet' magic string and raise a confusing
@@ -87,8 +124,8 @@ def events_ts_unit(path: str) -> str:
         unit = getattr(field.type, "unit", None)
         # A plain int64 ts (no logical type) is epoch-nanos in the r1-era
         # layout; treat it like nanos so the long+div-1000 path applies.
-        _EVENTS_TS_UNIT_CACHE[path] = unit or "ns"
-    return _EVENTS_TS_UNIT_CACHE[path]
+        cached = _EVENTS_TS_UNIT_CACHE[path] = (fp, unit or "ns")
+    return cached[1]
 
 
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
@@ -102,13 +139,32 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(EVENTS_SCHEMA).parquet(path)
 
 
+# SparkSession -> {path: (fingerprint, schema Spark inferred)}
+_SCHEMA_MEMO: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[tuple, StructType]]
+] = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    fp = _fingerprint(path)
+    if fp is None:
+        return spark.read.parquet(path)
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    kept = memo.get(path)
+    if kept is not None and kept[0] == fp:
+        return spark.read.schema(kept[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[path] = (fp, df.schema)
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _read_events(spark, path)
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 class _LazyTables(Mapping):

@@ -21,7 +21,10 @@ out frontier by frontier (r6 netpbm, r6 PNG, r7 palette PNG, r8
 Scale notes: mapInPandas streams Arrow batches (bounded by
 spark.sql.execution.arrow.maxRecordsPerBatch), so executor memory is
 per-batch not per-partition; repartition upstream on media_id to balance
-variable-sized blobs; never collect binaries to the driver.
+variable-sized blobs; never collect binaries to the driver. The synthetic
+media tables built here are `session.local_frame`s: a JVM
+`LocalTableScan`, so building and sorting them starts no Python worker;
+the only Python tasks of a media query are its mapInPandas kernels.
 """
 
 from __future__ import annotations
@@ -34,6 +37,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gtec_etl_spark.session import local_frame
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, content binary,"
@@ -173,7 +178,7 @@ def netpbm_media_table(
                  f"mem://netpbm/{i}.{fmt}"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _decode_one(content: bytes) -> tuple[int, int, bytes]:
@@ -319,7 +324,7 @@ def media_table(spark, n: int = 12, width: int = 32, height: int = 24) -> DataFr
         (i, "image", bytearray(fake_image(width, height, seed=i)), ("image/fake", f"mem://{i}"))
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -727,7 +732,7 @@ def png_subbyte_media_table(
                 ("image/png", f"mem://pngsub/{i}.png"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def png_media_table(
@@ -746,7 +751,7 @@ def png_media_table(
                 ("image/png", f"mem://png/{i}.png"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # JPEG layout per media_id % 4: gray, 4:4:4, 4:2:0, 4:2:0 + restart
@@ -777,7 +782,7 @@ def jpeg_media_table(
                 ("image/jpeg", f"mem://jpeg/{i}.jpg"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # 12-bit baseline layout per media_id % 4: gray, gray+restart markers,
@@ -808,7 +813,7 @@ def jpeg12_media_table(
                 ("image/jpeg", f"mem://jpeg12/{i}.jpg"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # Progressive (SOF2) layout per media_id % 4: gray, gray coarse-quant
@@ -839,7 +844,7 @@ def jpeg_prog_media_table(
                 ("image/jpeg", f"mem://jpegprog/{i}.jpg"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1120,7 +1125,7 @@ def wav_media_table(
                 ("audio/wav", f"mem://wav/{i}.wav"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # (bits, channels, audio_format) — companded and double layouts: G.711
@@ -1153,7 +1158,7 @@ def wav_g711_media_table(
                 ("audio/wav", f"mem://wavg711/{i}.wav"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # (bits, channels, audio_format) — the wide layouts: 24/32-bit int PCM and
@@ -1186,7 +1191,7 @@ def wav_deep_media_table(
                 ("audio/wav", f"mem://wavdeep/{i}.wav"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 AUDIO_WIN_SCHEMA = (
@@ -1601,7 +1606,7 @@ def wav_adpcm_media_table(
                 ("audio/wav", f"mem://wavadpcm/{i}.wav"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def wht_phash64(pix: bytes, w: int, h: int) -> int:
@@ -1677,7 +1682,7 @@ def phash_media_table(
                                 perturb=3, perturb_delta=32)),
              ("image/png", f"mem://phash/{100 + i}.png"))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _wht_pow2(v: list) -> list:
@@ -1747,7 +1752,7 @@ def audio_fp_media_table(
                                 perturb=16, perturb_delta=3000)),
              ("audio/wav", f"mem://afp/{100 + i}.wav"))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def banded_hamming_pairs(
@@ -1953,7 +1958,7 @@ def avi_media_table(spark, n: int = 8) -> DataFrame:
             (i, "video", bytearray(fake_avi_mjpeg(nf, w, h, fps, seed=i)),
              ("video/x-msvideo", f"mem://avi/{i}.avi"))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 # (n_frames, width, height, fps) scene-structured AVI cycle; scenes of
@@ -1979,7 +1984,7 @@ def scene_avi_media_table(spark, n: int = 8) -> DataFrame:
                 ("video/x-msvideo", f"mem://scene/{i}.avi"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def detect_shots(media: DataFrame, bins: int = SHOT_BINS) -> DataFrame:
@@ -2302,7 +2307,7 @@ def gif_media_table(
              bytearray(fake_gif(width, height, seed=i, depth=depth, interlace=il)),
              ("image/gif", f"mem://gif/{i}.gif"))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def fake_bmp(width: int, height: int, seed: int, bpp: int = 24) -> bytes:
@@ -2402,7 +2407,7 @@ def bmp_media_table(
             (i, "image", bytearray(fake_bmp(width, height, seed=i, bpp=bpp)),
              ("image/bmp", f"mem://bmp/{i}.bmp"))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def fake_tiff(
@@ -2544,7 +2549,7 @@ def tiff_media_table(
              bytearray(fake_tiff(width, height, seed=i, rgb=rgb, big_endian=be)),
              ("image/tiff", f"mem://tiff/{i}.tif"))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def augment_images(
@@ -2775,4 +2780,4 @@ def vad_wav_media_table(
                 ("audio/wav", f"mem://vadwav/{i}.wav"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

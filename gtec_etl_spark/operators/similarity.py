@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gtec_etl_spark.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product in double precision."""
@@ -171,8 +173,8 @@ def pq_kmeans_codebook(
                 C = C2
         for k, r in enumerate(rs):
             out.append((j, r, [int(v) for v in C[k]]))
-    return spark.createDataFrame(
-        [dict(zip(("j", "r", "c"), row)) for row in out], schema
+    return local_frame(
+        spark, [dict(zip(("j", "r", "c"), row)) for row in out], schema
     )
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from gtec_etl_spark import catalog
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 
 
 @query(
@@ -301,7 +302,8 @@ def q36_null_safe_join(spark, sf_dir):
         .otherwise(F.col("o_orderkey") % 5)
         .alias("k"),
     )
-    b = spark.createDataFrame(
+    b = local_frame(
+        spark,
         [(0, "label_0"), (1, "label_1"), (2, "label_2"), (None, "label_99")],
         "k long, label string",
     )

@@ -23,6 +23,7 @@ from gtec_etl_spark import catalog
 from gtec_etl_spark.functions.hashing import MINHASH_P, hash60, hash60_sql
 from gtec_etl_spark.operators import graph as G
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 
 PR_ITERS = 3
 PR_SCALE = 1_000_000_000_000  # rank fixed-point scale
@@ -391,8 +392,7 @@ def graph_khop_reachability(spark, sf_dir):
             )
             .orderBy("seed")
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         edges.unpersist()
 
@@ -945,7 +945,8 @@ def graph_kcore(spark, sf_dir):
         degs = degrees(edges)
         stats(degs, i)
     degs.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(r), int(n), int(e)) for r, n, e in out_rows],
         "round long, n_nodes long, n_edges_directed long",
     ).orderBy("round")

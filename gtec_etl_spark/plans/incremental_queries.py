@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from gtec_etl_spark import catalog
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 
 SCD2_EFF_DATE = "2024-06-01"
 
@@ -366,7 +367,7 @@ def etl_schema_evolution(spark, sf_dir):
             .orderBy("has_status")
         )
         # Materialize before the TemporaryDirectory vanishes.
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 @query(
@@ -457,7 +458,7 @@ def etl_time_travel(spark, sf_dir):
         )
         out = row1.unionByName(row2).orderBy("snapshot")
         # Materialize before the TemporaryDirectory vanishes.
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 SNAPDIFF_DEL_MOD, SNAPDIFF_DEL_REM = 89, 3

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 
 _MM_GOLDEN = os.path.abspath(
     os.path.join(os.path.dirname(__file__), "..", "..", "fixtures", "multimodal")
@@ -1234,7 +1235,7 @@ def mm_image_neardup(spark, sf_dir):
                 ("image/x-fake", f"mem://img/{i}"),
             )
         )
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
+    media = local_frame(spark, rows, M.MEDIA_SCHEMA)
     # Materialize the tiny signature table ONCE on one partition: without
     # this, the self-join's two sides each re-run the Arrow decode per
     # task and Catalyst plans a CartesianProduct over 32x32 partitions
@@ -1605,8 +1606,10 @@ def stream_lateness_report(spark, sf_dir):
             StructField("wm_lag_us", LongType(), True),
         ]
     )
-    return spark.createDataFrame(
-        [tuple(int(v) if v is not None else None for v in r) for r in rows], schema
+    return local_frame(
+        spark,
+        [tuple(int(v) if v is not None else None for v in r) for r in rows],
+        schema,
     ).orderBy("batch_id")
 
 

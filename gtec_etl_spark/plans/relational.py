@@ -15,6 +15,7 @@ from gtec_etl_spark import catalog
 from gtec_etl_spark.operators import aggregates as agg
 from gtec_etl_spark.operators import joins as J
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 
 # --------------------------------------------------------------------------
 # A5-style aggregation: the TPC-H Q1 pricing summary shape.
@@ -672,7 +673,8 @@ def q20_quantity_range_join(spark, sf_dir):
     scale path, SURVEY.md §1.2): ranges exploded into fixed-width buckets,
     equi-join on bucket, exact re-filter. Avoids the O(n·m) theta join."""
     li = catalog.table(spark, sf_dir, "lineitem")
-    ranges = spark.createDataFrame(
+    ranges = local_frame(
+        spark,
         [(0, 5, "XS"), (5, 15, "S"), (15, 30, "M"), (30, 60, "L")],
         "lo long, hi long, label string",
     )

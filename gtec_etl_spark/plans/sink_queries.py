@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from gtec_etl_spark import catalog
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 from gtec_etl_spark.sinks import jsonld, tabular
 
 
@@ -343,7 +344,7 @@ def k7_orc_roundtrip(spark, sf_dir):
             .orderBy("segment")
         )
         # Materialize before the TemporaryDirectory vanishes.
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 @query(
@@ -540,4 +541,4 @@ def k10_partition_overwrite(spark, sf_dir):
             )
             .orderBy("event_type", "day")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)

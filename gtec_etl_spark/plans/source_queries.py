@@ -17,6 +17,7 @@ import os
 from pyspark.sql import functions as F
 
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 from gtec_etl_spark.sources import gff3, json_docs, restricted, validated
 
 FIXTURES = os.path.abspath(
@@ -733,7 +734,7 @@ def src_csv_quoted(spark, sf_dir):
             .alias("n_multiline"),
             F.sum(F.length("c_comment")).cast("long").alias("total_comment_chars"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 @query(
@@ -790,4 +791,4 @@ def src_fixed_width(spark, sf_dir):
             F.count_distinct("c_mktsegment").cast("long").alias("n_segments"),
             F.sum(F.length("c_name")).cast("long").alias("total_name_chars"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from gtec_etl_spark import catalog
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 
 
 @query(
@@ -1368,7 +1369,7 @@ def ev_attribution_markov(spark, sf_dir):
             StructField("removal_effect_bp", LongType(), True),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("channel")
+    return local_frame(spark, rows, schema).orderBy("channel")
 
 
 #: Hot/cold anomaly gate for the seasonal baseline: a cell is anomalous

@@ -14,6 +14,7 @@ from gtec_etl_spark import catalog
 from gtec_etl_spark.functions.hashing import hash60, hash60_sql
 from gtec_etl_spark.operators.scale import cpu_fanout_repartition
 from gtec_etl_spark.plans.registry import query
+from gtec_etl_spark.session import local_frame
 
 # A BPE-ish word/number/punct segmentation — identical RE2/Java semantics.
 TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
@@ -1537,7 +1538,8 @@ def text_bpe_train(spark, sf_dir):
     docs = catalog.table(spark, sf_dir, "documents")
     merges, vocab = B.bpe_train(docs, BPE_K)
     vocab.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(i), l, r, int(c)) for (i, l, r, c) in merges],
         "iter long, lhs string, rhs string, pair_count long",
     ).orderBy("iter")

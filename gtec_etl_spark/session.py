@@ -10,6 +10,7 @@ UTC session timezone keeps timestamp semantics engine-independent.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,3 +75,28 @@ def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
     return spark.range(0).select(
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in StructType.fromDDL(ddl)]
     )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: str | StructType
+) -> DataFrame:
+    """DataFrame of driver-side `rows` (tuples, Rows or dicts) with the DDL
+    or StructType `schema`, planned as a JVM `LocalTableScan`.
+
+    `spark.createDataFrame(rows, schema)` gives the same frame but plans a
+    `PythonRDD`: every action on it runs Python-worker tasks, and a global
+    sort over it runs them twice (range sampling, then the map stage).
+    Here the rows go through the same `StructType.toInternal` conversion
+    (so dates and timestamps mean what they mean there) into one Arrow
+    table typed by the schema, which Spark reads into a local relation."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    arrow = to_arrow_schema(schema)
+    columns = [
+        pa.array([r[i] for r in internal], type=f.type) for i, f in enumerate(arrow)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)

@@ -21,6 +21,8 @@ from collections.abc import Callable, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gtec_etl_spark.session import local_frame
+
 Transport = Callable[[str], str]
 
 
@@ -71,7 +73,7 @@ def load_works(
         doc = json.loads(fetch_works(next_url, transport))
         rows.extend(_work_rows(doc))
         next_url = (doc.get("links") or {}).get("next")
-    return spark.createDataFrame(rows, "doi string, title string, version string")
+    return local_frame(spark, rows, "doi string, title string, version string")
 
 
 def _work_rows(doc: dict) -> list[tuple]:
@@ -87,8 +89,8 @@ def _work_rows(doc: dict) -> list[tuple]:
 def parse_works(spark: SparkSession, payload: str) -> DataFrame:
     """Parse a works-API JSON payload ({data:[{attributes:{doi,titles,
     version}}]}) into a (doi, title, version) DataFrame."""
-    return spark.createDataFrame(
-        _work_rows(json.loads(payload)), "doi string, title string, version string"
+    return local_frame(
+        spark, _work_rows(json.loads(payload)), "doi string, title string, version string"
     )
 
 
@@ -100,11 +102,6 @@ def duplicate_titles(works: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.sort_array(F.collect_list("doi")).alias("dois"))
         .filter(F.col("n") > 1)
     )
-
-
-def title_to_doi(works: DataFrame) -> DataFrame:
-    """The title→DOI lookup dimension (broadcast-join it downstream)."""
-    return works.select("title", "doi")
 
 
 def version_anomalies(

@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gtec_etl_spark.session import local_frame
+
 # dbGaP file-name shape the reference parses (public_metadata.py:16-40):
 #   phs000951.v2.pht005252.v2.TOPMed_WGS_Amish_Subject.data_dict.xml
 FILENAME_RE = (
@@ -150,7 +152,7 @@ def scan_study_directory(spark: SparkSession, directory: str) -> DataFrame:
     names = [
         (f,) for f in sorted(os.listdir(directory)) if f.endswith(".xml")
     ]
-    files = spark.createDataFrame(names, "file_name string")
+    files = local_frame(spark, names, "file_name string")
     parsed = files.select(
         "file_name",
         F.regexp_extract("file_name", FILENAME_RE, 1).alias("study_id"),

@@ -55,6 +55,7 @@ from gtec_etl_spark.catalog import (  # noqa: E402
     EVENTS_SCHEMA,
     events_ts_unit,
 )
+from gtec_etl_spark.session import local_frame  # noqa: E402
 
 
 def read_events_stream(
@@ -230,7 +231,7 @@ def dedup_ingest_batch(
             .select("band", "sig")
         )
     except AnalysisException:
-        index = s.createDataFrame([], bands_df.select("band", "sig").schema)
+        index = local_frame(s, [], bands_df.select("band", "sig").schema)
     suspects = (
         bands_df.join(index, ["band", "sig"], "left_semi")
         .select("doc_id")
@@ -370,9 +371,7 @@ def run_cdc_dimension_maintenance(
         s = batch_df.sparkSession
         prev = _latest_version_below(s, batch_id)
         if prev is None:
-            base = s.createDataFrame(
-                [], batch_df.drop("op", "seq").schema
-            )
+            base = local_frame(s, [], batch_df.drop("op", "seq").schema)
         else:
             base = s.read.parquet(f"{snapshot_dir}/version={prev}")
         latest = cdc.collapse_changelog(batch_df, key, list(attrs))

@@ -107,3 +107,102 @@ def test_both_units_read_identically(spark, tmp_path, unit):
         .collect()
     ]
     assert got == micros
+
+
+def _events_table(ts: pa.Array) -> pa.Table:
+    n = len(ts)
+    return pa.table(
+        {
+            "event_id": pa.array(range(1, n + 1), type=pa.int64()),
+            "ts": ts,
+            "user_id": pa.array([10] * n, type=pa.int64()),
+            "event_type": pa.array(["a"] * n),
+            "value": pa.array([1.5] * n, type=pa.float64()),
+            "props": pa.array(["{}"] * n),
+        }
+    )
+
+
+def test_events_rewritten_with_other_unit_is_probed_again(spark, tmp_path):
+    """The ts-unit cache is keyed on the file's stat fingerprint, not the
+    path alone: an events file regenerated at the same path as int64-nanos
+    after a MICROS read must not reuse the cached 'us' (the round-4
+    div-1000 failure through the cache)."""
+    from pyspark.sql import functions as F
+
+    micros = [1_704_110_400_000_000, 1_705_289_459_123_456]  # 2024-01-01, -15
+    path = tmp_path / "events.parquet"
+
+    def read_micros():
+        return [
+            r["tsm"]
+            for r in catalog.table(spark, str(tmp_path), "events")
+            .select(F.unix_micros("ts").alias("tsm"))
+            .orderBy("tsm")
+            .collect()
+        ]
+
+    pq.write_table(_events_table(pa.array(micros, type=pa.timestamp("us"))), path)
+    assert read_micros() == micros
+    pq.write_table(
+        _events_table(pa.array([m * 1000 for m in micros], type=pa.int64())), path
+    )
+    assert catalog.events_ts_unit(str(path)) == "ns"
+    assert read_micros() == micros
+
+
+def _jobs_in(spark, tag: str, fn):
+    sc = spark.sparkContext
+    group = f"catalog-{tag}"
+    sc.setJobGroup(group, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_table_read_runs_no_job(spark, tmp_path):
+    """The first read of a path infers the schema (a Spark job that merges
+    footer schemas); a second read of the unchanged path reuses the
+    inferred schema and starts no job at all."""
+    pq.write_table(
+        pa.table({"n_nationkey": [1, 2], "n_name": ["a", "b"]}),
+        tmp_path / "nation.parquet",
+    )
+    first, n_first = _jobs_in(
+        spark, f"first-{tmp_path.name}", lambda: catalog.table(spark, str(tmp_path), "nation")
+    )
+    second, n_second = _jobs_in(
+        spark, f"second-{tmp_path.name}", lambda: catalog.table(spark, str(tmp_path), "nation")
+    )
+    assert n_first > 0  # the measurement sees inference when it happens
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_rewritten_table_is_inferred_again(spark, tmp_path):
+    """Overwriting the file at the same path (here with an extra column)
+    changes its fingerprint, so the next read sees the new schema."""
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert catalog.table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["x", "y"]}), path)
+    t = catalog.table(spark, str(tmp_path), "region")
+    assert t.columns == ["r_regionkey", "r_name"]
+    assert sorted(t.collect()) == [(0, "x"), (1, "y")]
+
+
+def test_directory_table_sees_added_file(spark, tmp_path):
+    """A directory's fingerprint covers every file under it, so adding a
+    part file invalidates the memo."""
+    d = tmp_path / "part.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"p_partkey": [1]}), d / "part-0.parquet")
+    assert catalog.table(spark, str(tmp_path), "part").count() == 1
+    before = catalog._fingerprint(str(d))
+    pq.write_table(pa.table({"p_partkey": [2]}), d / "part-1.parquet")
+    assert catalog._fingerprint(str(d)) != before
+    assert catalog.table(spark, str(tmp_path), "part").count() == 2
